@@ -1,8 +1,7 @@
 package graft
 
 import java.io.File
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import scala.jdk.CollectionConverters._
+import graft.CatalogBackend.FileStat
 
 /**
  * Lake catalog: resolves `db.table` to a minimal list of parquet files
@@ -29,9 +28,6 @@ import scala.jdk.CollectionConverters._
  * min/max pushdown below it.
  */
 class Catalog(val root: String) extends CatalogBackend {
-  private val mapper = new ObjectMapper()
-
-  case class FileEntry(path: String, minTime: Option[Long], maxTime: Option[Long])
 
   private def subdirs(f: File): Seq[File] =
     Option(f.listFiles()).map(_.toSeq.filter(d => d.isDirectory &&
@@ -42,55 +38,41 @@ class Catalog(val root: String) extends CatalogBackend {
   def tables(db: String): Seq[String] =
     subdirs(new File(root, db)).map(_.getName).sorted
 
-  /** Overlap test on inclusive zone-map bounds (missing stats ⇒ keep). */
-  private def overlaps(min: Option[Long], max: Option[Long],
-                       range: Option[(Long, Long)]): Boolean = range match {
-    case None => true
-    case Some((start, end)) =>
-      max.forall(_ >= start) && min.forall(_ <= end)
+  /** One folder of a table: its metadata.json entries (Nil without
+    * one) and the parquet files on disk in it. */
+  private case class Folder(entries: Seq[FileStat], parquets: Seq[File]) {
+    lazy val byName: Map[String, FileStat] =
+      entries.map(e => new File(e.path).getName -> e).toMap
   }
 
-  private def parseMeta(dir: File): Option[JsonNode] = {
-    val f = new File(dir, "metadata.json")
-    if (f.isFile) scala.util.Try(mapper.readTree(f)).toOption else None
-  }
-
-  private def optLong(n: JsonNode, field: String): Option[Long] =
-    Option(n.get(field)).filter(_.isNumber).map(_.asLong())
-
-  /** Recursively list parquet files under a table dir, zone-map-pruned. */
-  def files(db: String, table: String,
-            range: Option[(Long, Long)] = None): Seq[FileEntry] = {
-    def walk(dir: File): Seq[FileEntry] = {
+  /** The one recursive walk of a table's folders; a folder whose zone
+    * map misses `range` is skipped without listing its files. */
+  private def walk(db: String, table: String,
+                   range: Option[(Long, Long)]): Seq[Folder] = {
+    def go(dir: File): Seq[Folder] = {
       // tmp/ = half-written data (reference convention); _/. prefixes =
       // hidden sidecars (Hadoop convention — Spark's own FileIndex
       // ignores them too, e.g. the _signatures dedup store)
       if (dir.getName == "tmp" || dir.getName.startsWith("_") ||
           dir.getName.startsWith(".")) return Nil
-      val meta = parseMeta(dir)
-      // folder-level skip
-      if (meta.exists(m => !overlaps(optLong(m, "min_time"), optLong(m, "max_time"), range)))
-        return Nil
-      val withStats: Map[String, (Option[Long], Option[Long])] = meta match {
-        case Some(m) if m.has("files") =>
-          m.get("files").elements().asScala.map { fn =>
-            val p = Option(fn.get("path")).map(_.asText()).getOrElse("")
-            new File(p).getName -> (optLong(fn, "min_time"), optLong(fn, "max_time"))
-          }.toMap
-        case _ => Map.empty
-      }
+      val meta = CatalogBackend.readMeta(dir)
+      if (meta.exists(!_._1.overlaps(range))) return Nil
       val here = Option(dir.listFiles()).map(_.toSeq).getOrElse(Nil)
-      val parquets = here.filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        .flatMap { f =>
-          val (mn, mx) = withStats.getOrElse(f.getName, (None, None))
-          if (overlaps(mn, mx, range)) Some(FileEntry(f.getAbsolutePath, mn, mx))
-          else None
-        }
-      parquets ++ here.filter(_.isDirectory).flatMap(walk)
+      Folder(meta.fold(Seq.empty[FileStat])(_._2),
+        here.filter(f => f.isFile && f.getName.endsWith(".parquet"))) +:
+        here.filter(_.isDirectory).flatMap(go)
     }
-    val tableDir = new File(new File(root, db), table)
-    if (!tableDir.isDirectory) Nil else walk(tableDir)
+    go(new File(new File(root, db), table))
   }
+
+  /** The table's on-disk parquet files with their zone maps (a file no
+    * metadata.json names has none), pruned to those overlapping `range`. */
+  def files(db: String, table: String,
+            range: Option[(Long, Long)] = None): Seq[FileStat] =
+    walk(db, table, range).flatMap { f =>
+      f.parquets.map(p => f.byName.get(p.getName)
+        .fold(FileStat(p.getAbsolutePath, None, None))(_.copy(path = p.getAbsolutePath)))
+    }.filter(_.overlaps(range))
 
   def prunedPaths(db: String, table: String,
                   range: Option[(Long, Long)]): Seq[String] =
@@ -99,65 +81,17 @@ class Catalog(val root: String) extends CatalogBackend {
   def tableExists(db: String, table: String): Boolean =
     new File(new File(root, db), table).isDirectory
 
-  /**
-   * Both metadata aggregates — row count and zone-map time bounds —
-   * from ONE recursive pass over the metadata.json sidecars (they sit
-   * on the request hot path; walking twice would double the listing +
-   * parsing). Metadata is AUTHORITATIVE for the files it lists; the
-   * directory listing only proves no uncovered parquet file exists
-   * (an uncovered file holds rows/times the sums would miss). Each
-   * side is independently provable: an entry with row_count but no
-   * min/max fails only the bounds. Empty table ⇒ count Some(0) but
-   * bounds None (min/max of no rows is NULL — let a scan produce it).
-   * `tmp/` dirs are skipped as always.
-   */
-  /**
-   * All metadata entries (row_count, time bounds per file) from ONE
-   * recursive pass over the metadata.json sidecars, or None if any
-   * on-disk parquet file is not covered by an entry (an uncovered
-   * file holds rows/times the sums would miss). Metadata is
-   * AUTHORITATIVE for the files it lists; `tmp/` dirs are skipped.
-   */
-  private def metaEntries(db: String, table: String)
-      : Option[Seq[(Option[Long], Option[(Long, Long)])]] = {
-    def walk(dir: File): Option[Seq[(Option[Long], Option[(Long, Long)])]] = {
-      if (dir.getName == "tmp" || dir.getName.startsWith("_") ||
-          dir.getName.startsWith(".")) return Some(Nil)
-      val entries: Seq[(String, Option[Long], Option[(Long, Long)])] =
-        parseMeta(dir) match {
-          case Some(m) if m.has("files") =>
-            m.get("files").elements().asScala.flatMap { fn =>
-              Option(fn.get("path")).map(_.asText()).map { p =>
-                (new File(p).getName, optLong(fn, "row_count"),
-                  for (mn <- optLong(fn, "min_time"); mx <- optLong(fn, "max_time"))
-                    yield (mn, mx))
-              }
-            }.toSeq
-          case _ => Nil
-        }
-      val names = entries.map(_._1).toSet
-      val here = Option(dir.listFiles()).map(_.toSeq).getOrElse(Nil)
-      val uncovered = here.exists(f => f.isFile &&
-        f.getName.endsWith(".parquet") && !names(f.getName))
-      if (uncovered) None
-      else here.filter(_.isDirectory)
-        .foldLeft(Option(entries.map(e => (e._2, e._3)))) { (acc, d) =>
-          for (a <- acc; c <- walk(d)) yield a ++ c
-        }
+  /** All metadata.json entries, or None if any on-disk parquet file is
+    * not named by one (an uncovered file holds rows/times the sums
+    * would miss). An entry whose file is gone still counts: metadata is
+    * authoritative for the files it names. */
+  override protected def metadataEntries(db: String, table: String)
+      : Option[Seq[FileStat]] =
+    if (!tableExists(db, table)) None
+    else {
+      val folders = walk(db, table, None)
+      if (folders.forall(f => f.parquets.forall(p => f.byName.contains(p.getName))))
+        Some(folders.flatMap(_.entries))
+      else None
     }
-    val tableDir = new File(new File(root, db), table)
-    if (!tableDir.isDirectory) None else walk(tableDir)
-  }
-
-  override def metadataStats(db: String, table: String)
-      : (Option[Long], Option[(Long, Long)]) =
-    metaEntries(db, table) match {
-      case None => (None, None)
-      case Some(es) => CatalogBackend.statsOf(es)
-    }
-
-  override def metadataRangeCount(db: String, table: String,
-                                  range: (Long, Long)): Option[Long] =
-    metaEntries(db, table)
-      .flatMap(CatalogBackend.rangeCountOf(_, range))
 }

@@ -1,5 +1,11 @@
 package graft
 
+import java.io.File
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.sql.SparkSession
+
 /**
  * Catalog backend abstraction — the reference selects its metadata
  * index implementation by config (`json` → filesystem metadata.json
@@ -46,12 +52,24 @@ trait CatalogBackend {
     metadataStats(db, table)._1
 
   /**
+   * Every file's zone map for `db.table`, or None when the backend
+   * cannot vouch that the entries cover the whole table. Metadata is
+   * authoritative for the files it names. Both metadata aggregates
+   * below derive from this one listing. Default None: a backend
+   * without metadata never claims a provable aggregate.
+   */
+  protected def metadataEntries(db: String, table: String)
+      : Option[Seq[CatalogBackend.FileStat]] = None
+
+  /**
    * Both metadata aggregates from ONE metadata pass:
    * (provable row count, provable (min_time, max_time)). Each side is
    * independently None when unprovable.
    */
   def metadataStats(db: String, table: String)
-      : (Option[Long], Option[(Long, Long)]) = (None, None)
+      : (Option[Long], Option[(Long, Long)]) =
+    metadataEntries(db, table).map(es => CatalogBackend.statsOf(es.map(_.stats)))
+      .getOrElse((None, None))
 
   /**
    * Exact row count of `db.table` restricted to the INCLUSIVE time
@@ -62,7 +80,9 @@ trait CatalogBackend {
    * in the common case.
    */
   def metadataRangeCount(db: String, table: String,
-                         range: (Long, Long)): Option[Long] = None
+                         range: (Long, Long)): Option[Long] =
+    metadataEntries(db, table)
+      .flatMap(es => CatalogBackend.rangeCountOf(es.map(_.stats), range))
 
   /**
    * Exact (min_time, max_time) over `db.table` when every file carries
@@ -91,10 +111,118 @@ trait CatalogBackend {
   def clear(db: String, table: String): Unit = ()
 }
 
+/**
+ * The owner of the lake's per-file zone map `{path, row_count,
+ * min_time, max_time}`: its type ([[FileStat]]), the stats job that
+ * computes it for newly written files, its one JSON codec (shared by
+ * the per-folder `metadata.json` and the redis stats hash), the one
+ * `metadata.json` reader and writer, and the aggregates proved from it.
+ */
 object CatalogBackend {
-  /** One file's registration payload: path + zone-map stats. */
+  /** One file's zone map. A missing stat is unknown, never 0. */
   case class FileStat(path: String, minTime: Option[Long],
-                      maxTime: Option[Long], rowCount: Option[Long] = None)
+                      maxTime: Option[Long], rowCount: Option[Long] = None) {
+    /** Overlap test on inclusive bounds; a missing bound never prunes. */
+    def overlaps(range: Option[(Long, Long)]): Boolean = range.forall {
+      case (start, end) => maxTime.forall(_ >= start) && minTime.forall(_ <= end)
+    }
+
+    /** (row count, bounds): the shape [[statsOf]]/[[rangeCountOf]] take. */
+    def stats: (Option[Long], Option[(Long, Long)]) =
+      (rowCount, for (mn <- minTime; mx <- maxTime) yield (mn, mx))
+  }
+
+  private[graft] val json = new ObjectMapper()
+
+  /** The stats of `s` onto `out`; unknown stats are left out. */
+  private def putStats(out: ObjectNode, s: FileStat): ObjectNode = {
+    s.rowCount.foreach(out.put("row_count", _))
+    s.minTime.foreach(out.put("min_time", _))
+    s.maxTime.foreach(out.put("max_time", _))
+    out
+  }
+
+  /** A zone map as JSON: `{path, row_count, min_time, max_time}`. */
+  def encode(s: FileStat): ObjectNode =
+    putStats(json.createObjectNode().put("path", s.path), s)
+
+  /** The zone map in JSON object `n` for the file at `path`. */
+  def decode(n: JsonNode, path: String): FileStat = {
+    def l(f: String) = Option(n.get(f)).filter(_.isNumber).map(_.asLong())
+    FileStat(path, l("min_time"), l("max_time"), l("row_count"))
+  }
+
+  /**
+   * The one `metadata.json` reader: a folder's own zone map and its
+   * file entries (an entry without `path` names no file and is
+   * dropped). None when the folder has no readable metadata.json.
+   */
+  def readMeta(dir: File): Option[(FileStat, Seq[FileStat])] = {
+    val f = new File(dir, "metadata.json")
+    if (!f.isFile) None
+    else scala.util.Try {
+      val root = json.readTree(f)
+      val files = Option(root.get("files")).toSeq.flatMap(_.elements().asScala)
+      (decode(root, dir.getPath),
+        files.flatMap(n => Option(n.get("path")).map(p => decode(n, p.asText()))))
+    }.toOption
+  }
+
+  /**
+   * The one `metadata.json` writer: merges `fresh` zone maps into the
+   * folder's file. Entries are keyed by file name, as the read side
+   * keys them: a fresh entry replaces its name's prior entry, a prior
+   * entry whose file is gone drops, and every other prior entry is
+   * kept as written (its `path` spelling and unknown stats included).
+   * The folder's own zone map is recomputed over the merged set; its
+   * row_count is left out unless every entry has one.
+   */
+  def mergeMeta(dir: File, fresh: Seq[FileStat]): Unit = {
+    def name(e: FileStat) = new File(e.path).getName
+    val named = fresh.map(e => e.copy(path = name(e)))
+    val names = named.map(_.path).toSet
+    val entries = readMeta(dir).fold(Seq.empty[FileStat])(_._2)
+      .filter(e => !names(name(e)) && new File(dir, name(e)).isFile) ++ named
+    val bounded = entries.filter(e => e.minTime.isDefined && e.maxTime.isDefined)
+    val folder = FileStat(dir.getPath, bounded.flatMap(_.minTime).minOption,
+      bounded.flatMap(_.maxTime).maxOption,
+      if (entries.forall(_.rowCount.isDefined)) Some(entries.flatMap(_.rowCount).sum)
+      else None)
+    val root = putStats(json.createObjectNode().put("type", "parquet"), folder)
+    root.putArray("files").addAll(entries.map(encode).asJava)
+    json.writeValue(new File(dir, "metadata.json"), root)
+  }
+
+  /**
+   * The stats job: per-file min/max/count of `timeCol` over the parquet
+   * at `paths`, grouped by input file. One small aggregate whose
+   * O(#files) result rows are metadata, not data. A file whose time
+   * values are all NULL gets no bounds (kept unpruned).
+   */
+  def fileStats(spark: SparkSession, paths: Seq[String], timeCol: String): Seq[FileStat] = {
+    import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
+    if (paths.isEmpty) Nil
+    else spark.read.parquet(paths: _*)
+      .select(col(timeCol), input_file_name().as("file"))
+      .groupBy(col("file"))
+      .agg(min(timeCol), max(timeCol), count(lit(1)))
+      .collect().toSeq.map { r =>
+        def l(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
+        FileStat(LakeWriter.catalogPath(r.getString(0)), l(1), l(2), l(3))
+      }
+  }
+
+  /**
+   * Publishes freshly computed zone maps: registers them with the
+   * backend, and on a local lake merges them into their folders'
+   * `metadata.json`.
+   */
+  def publish(db: String, table: String, stats: Seq[FileStat], local: Boolean,
+              catalog: Option[CatalogBackend]): Unit = {
+    catalog.foreach(_.register(db, table, stats))
+    if (local) stats.groupBy(s => new File(s.path).getParentFile)
+      .foreach { case (dir, es) => mergeMeta(dir, es) }
+  }
 
   /** (provable count, provable bounds) over per-file metadata entries
     * — each side independently None when any entry lacks its stat.

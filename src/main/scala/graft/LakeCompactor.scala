@@ -2,7 +2,6 @@ package graft
 
 import java.io.File
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /**
  * Small-file compaction for a lake measurement — the maintenance
@@ -73,29 +72,11 @@ object LakeCompactor {
           dst
         }
         org.apache.commons.io.FileUtils.deleteDirectory(staging)
-        // stats for the new files only (metadata-sized collect)
-        val stats = spark.read.parquet(moved.map(_.getAbsolutePath): _*)
-          .select(col(timeCol), input_file_name().as("file"))
-          .groupBy(col("file"))
-          .agg(min(timeCol).as("mn"), max(timeCol).as("mx"), count(lit(1)).as("n"))
-          .collect()
-        val entries = stats.toSeq.map { r =>
-          val name = new File(new java.net.URI(r.getString(0)).getPath).getName
-          val s = if (r.isNullAt(1) || r.isNullAt(2)) None
-            else Some((r.getLong(1), r.getLong(2)))
-          (name, s, r.getLong(3))
-        }
+        val stats = CatalogBackend.fileStats(spark, moved.map(_.getAbsolutePath), timeCol)
         old.foreach(_.delete()) // readers switch to the compacted files
-        LakeWriter.writeFolderMeta(folder, entries) // stale entries drop
-        catalog.foreach { c =>
-          c.register(db, table, stats.toSeq.map { r =>
-            val s = if (r.isNullAt(1) || r.isNullAt(2)) (None, None)
-              else (Some(r.getLong(1)), Some(r.getLong(2)))
-            CatalogBackend.FileStat(LakeWriter.catalogPath(r.getString(0)),
-              s._1, s._2, Some(r.getLong(3)))
-          })
-          c.deregister(db, table, old.map(_.getAbsolutePath))
-        }
+        // the deleted files' metadata.json entries drop in the merge
+        CatalogBackend.publish(db, table, stats, local = true, catalog)
+        catalog.foreach(_.deregister(db, table, old.map(_.getAbsolutePath)))
         after += moved.size
       }
     }

@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -14,9 +13,10 @@ import org.apache.spark.sql.functions._
  * immediately time-prunable by `Catalog`.
  *
  * Scale shape: one distributed write partitioned by the derived date
- * column (Hive layout → native partition pruning), then one small
- * aggregate (per-file min/max/count over the written files' stats
- * query) to emit the zone maps. No data passes through the driver.
+ * column (Hive layout → native partition pruning), then
+ * [[CatalogBackend.fileStats]]' small per-file min/max/count aggregate
+ * over the written files to emit the zone maps. No data passes
+ * through the driver.
  */
 object LakeWriter {
 
@@ -79,49 +79,18 @@ object LakeWriter {
       if (local && mode == SaveMode.Append) listParquet(localFile(tableDir))
       else Set.empty
     writer.partitionBy(partCols: _*).parquet(tableDir)
-    // zone maps: min/max time per newly written file. On a non-local
-    // lake (no walkable listing) fall back to the whole-table scan;
-    // register is idempotent by path, so that stays correct.
-    val statsSource =
-      if (local) {
-        val delta = (listParquet(localFile(tableDir)) -- before).toSeq.sorted
-        if (delta.isEmpty) None else Some(spark.read.parquet(delta: _*))
-      } else Some(spark.read.parquet(tableDir))
-    val written = statsSource.map {
-      _.select(col(timeCol), input_file_name().as("file"))
-        .groupBy(col("file"))
-        .agg(min(timeCol).as("mn"), max(timeCol).as("mx"), count(lit(1)).as("n"))
-        .collect() // O(#files) rows — metadata, not data
-    }.getOrElse(Array.empty[org.apache.spark.sql.Row])
-    // publish to the active catalog backend too (same stats as the
-    // zone maps) — a redis-indexed lake sees the new files without a
-    // filesystem walk; the json backend's no-op register is covered by
-    // the metadata.json written below. Overwrite first drops the old
-    // entries: the fresh part files have new names, so stale paths to
-    // deleted files would otherwise survive in the index.
-    catalog.foreach { c =>
-      if (mode == SaveMode.Overwrite) c.clear(db, table)
-      c.register(db, table, written.map { r =>
-        val stats = if (r.isNullAt(1) || r.isNullAt(2)) (None, None)
-          else (Some(r.getLong(1)), Some(r.getLong(2)))
-        CatalogBackend.FileStat(catalogPath(r.getString(0)),
-          stats._1, stats._2, Some(r.getLong(3)))
-      }.toSeq)
-    }
-    if (local) written
-      .groupBy(r => new File(new java.net.URI(r.getString(0)).getPath).getParent)
-      .foreach { case (folder, files) =>
-        // a file whose time values are ALL NULL has null min/max — emit
-        // its entry without stats (Catalog keeps stat-less files
-        // unpruned) instead of NPE-ing after the data is already on disk
-        val entries = files.toSeq.map { r =>
-          val name = new File(new java.net.URI(r.getString(0)).getPath).getName
-          val stats = if (r.isNullAt(1) || r.isNullAt(2)) None
-            else Some((r.getLong(1), r.getLong(2)))
-          (name, stats, r.getLong(3))
-        }
-        writeFolderMeta(new File(folder), entries)
-      }
+    // zone maps of the newly written files only. On a non-local lake
+    // (no walkable listing) fall back to the whole table; register is
+    // idempotent by path, so that stays correct.
+    val fresh =
+      if (local) (listParquet(localFile(tableDir)) -- before).toSeq.sorted
+      else Seq(tableDir)
+    val stats = CatalogBackend.fileStats(spark, fresh, timeCol)
+    // Overwrite first drops the backend's old entries: the fresh part
+    // files have new names, so stale paths to deleted files would
+    // otherwise survive in the index.
+    if (mode == SaveMode.Overwrite) catalog.foreach(_.clear(db, table))
+    CatalogBackend.publish(db, table, stats, local, catalog)
   }
 
   /** file: (or bare-path) URIs keep their filesystem path; any other
@@ -151,46 +120,4 @@ object LakeWriter {
       else if (f.isFile && f.getName.endsWith(".parquet")) Seq(f.getAbsolutePath)
       else Nil
     }.toSet
-
-  /**
-   * Write (or incrementally merge) a folder's `metadata.json`: entries
-   * for files re-written in this commit replace their old entry by
-   * name; entries for untouched files survive, so an Append publishes
-   * its delta without losing the folder's history. Folder-level
-   * min/max/row_count are recomputed over the merged set.
-   */
-  private[graft] def writeFolderMeta(folder: File,
-      newEntries: Seq[(String, Option[(Long, Long)], Long)]): Unit = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val metaFile = new File(folder, "metadata.json")
-    val prior: Seq[(String, Option[(Long, Long)], Long)] =
-      if (!metaFile.isFile) Nil
-      else scala.util.Try {
-        import scala.jdk.CollectionConverters._
-        val root = mapper.readTree(metaFile)
-        Option(root.get("files")).toSeq.flatMap(_.elements().asScala).map { fn =>
-          def l(f: String) = Option(fn.get(f)).filter(_.isNumber).map(_.asLong())
-          val stats = for (mn <- l("min_time"); mx <- l("max_time")) yield (mn, mx)
-          (Option(fn.get("path")).map(_.asText()).getOrElse(""),
-           stats, l("row_count").getOrElse(0L))
-        }
-      }.getOrElse(Nil)
-    val newNames = newEntries.map(_._1).toSet
-    // drop prior entries whose file no longer exists (overwritten dirs)
-    val entries = prior.filterNot(e =>
-      newNames(e._1) || !new File(folder, e._1).isFile) ++ newEntries
-    val bounds = entries.flatMap(_._2)
-    val folderStats =
-      if (bounds.isEmpty) ""
-      else s""""min_time":${bounds.map(_._1).min},"max_time":${bounds.map(_._2).max},"""
-    val n = entries.map(_._3).sum
-    val filesJson = entries.map {
-      case (p, Some((fmn, fmx)), fn) =>
-        s"""{"path":"$p","row_count":$fn,"min_time":$fmn,"max_time":$fmx}"""
-      case (p, None, fn) =>
-        s"""{"path":"$p","row_count":$fn}"""
-    }.mkString("[", ",", "]")
-    Files.writeString(metaFile.toPath,
-      s"""{"type":"parquet","row_count":$n,$folderStats"files":$filesJson}""")
-  }
 }

@@ -3,7 +3,7 @@ package graft
 import java.io.{BufferedInputStream, BufferedOutputStream, EOFException}
 import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
-import com.fasterxml.jackson.databind.ObjectMapper
+import graft.CatalogBackend.{FileStat, decode, encode, json}
 
 /**
  * Redis-backed catalog index — the reference's second metadata backend
@@ -24,8 +24,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
  *     BY PATH: a compactor re-registering a file with new stats
  *     replaces the score instead of accumulating a second entry (which
  *     would make the scan read the file twice).
- *   - `graft:stats:{db}:{table}` HASH path → JSON
- *     `{"min_time":…,"max_time":…}` — the exact int64 bounds for the
+ *   - `graft:stats:{db}:{table}` HASH path → the file's zone map in
+ *     [[CatalogBackend.encode]]'s JSON — the exact int64 bounds for the
  *     client-side overlap re-check (ZSET scores are lossy doubles).
  *
  * The score-by-max_time layout makes the time-range lookup a
@@ -65,7 +65,6 @@ class RedisCatalog(url: String) extends CatalogBackend with AutoCloseable {
   private val socket = new Socket(host, port)
   private val in = new BufferedInputStream(socket.getInputStream)
   private val out = new BufferedOutputStream(socket.getOutputStream)
-  private val mapper = new ObjectMapper()
 
   auth.foreach(a => command("AUTH" +: a: _*))
   if (dbNum != 0) command("SELECT", dbNum.toString)
@@ -168,16 +167,9 @@ class RedisCatalog(url: String) extends CatalogBackend with AutoCloseable {
       case s: Seq[_] => s.map(Option(_).collect { case x: String => x })
       case _         => Seq.fill(paths.size)(None)
     }
-    paths.zip(statsJson).collect {
-      case (path, json) if range.isEmpty || {
-        val (start, end) = range.get
-        json.forall { j => // no stats ⇒ keep
-          val node = mapper.readTree(j)
-          val minT = Option(node.get("min_time")).filter(_.isNumber).map(_.asLong())
-          val maxT = Option(node.get("max_time")).filter(_.isNumber).map(_.asLong())
-          minT.forall(_ <= end) && maxT.forall(_ >= start)
-        }
-      } => path
+    paths.zip(statsJson).collect { // no stats ⇒ keep
+      case (path, stats) if stats.forall(j => decode(json.readTree(j), path).overlaps(range)) =>
+        path
     }.sorted
   }
 
@@ -194,57 +186,25 @@ class RedisCatalog(url: String) extends CatalogBackend with AutoCloseable {
    * would be scanned twice.
    */
   override def register(db: String, table: String,
-               entries: Seq[CatalogBackend.FileStat]): Unit = {
+               entries: Seq[FileStat]): Unit = {
     command("SADD", "graft:dbs", db)
     command("SADD", s"graft:tables:$db", table)
     entries.foreach { e =>
-      val json = {
-        val n = mapper.createObjectNode()
-        e.minTime.foreach(n.put("min_time", _))
-        e.maxTime.foreach(n.put("max_time", _))
-        e.rowCount.foreach(n.put("row_count", _))
-        mapper.writeValueAsString(n)
-      }
       val score = e.maxTime.map(_.toString).getOrElse("+inf")
       command("ZADD", idxKey(db, table), score, e.path)
-      command("HSET", statsKey(db, table), e.path, json)
+      command("HSET", statsKey(db, table), e.path, json.writeValueAsString(encode(e)))
     }
   }
 
-  /**
-   * Metadata aggregates from the stats hash — the index IS the lake's
-   * source of truth here (no filesystem to cross-check), so coverage
-   * means "every registered entry carries the stat". An empty index
-   * answers (None, None): a table might be mid-registration, and a
-   * confidently-wrong 0 is worse than a scan.
-   */
-  /** Per-file (row_count, bounds) entries from one HGETALL — the
-    * index IS the lake's source of truth here (no filesystem to
-    * cross-check). An empty index yields no entries: a table might be
-    * mid-registration, and a confidently-wrong 0 is worse than a scan. */
-  private def metaEntries(db: String, table: String)
-      : Seq[(Option[Long], Option[(Long, Long)])] = {
-    val kv = command("HGETALL", statsKey(db, table)) match {
-      case s: Seq[_] => s.collect { case x: String => x }.grouped(2)
-        .collect { case Seq(_, v) => mapper.readTree(v) }.toSeq
-      case _ => Nil
-    }
-    def l(n: com.fasterxml.jackson.databind.JsonNode, f: String): Option[Long] =
-      Option(n.get(f)).filter(_.isNumber).map(_.asLong())
-    kv.map(n => (l(n, "row_count"),
-      for (mn <- l(n, "min_time"); mx <- l(n, "max_time")) yield (mn, mx)))
-  }
-
-  override def metadataStats(db: String, table: String)
-      : (Option[Long], Option[(Long, Long)]) = {
-    val es = metaEntries(db, table)
-    if (es.isEmpty) (None, None) else CatalogBackend.statsOf(es)
-  }
-
-  override def metadataRangeCount(db: String, table: String,
-                                  range: (Long, Long)): Option[Long] = {
-    val es = metaEntries(db, table)
-    if (es.isEmpty) None else CatalogBackend.rangeCountOf(es, range)
+  /** Every registered zone map from one HGETALL — the index IS the
+    * lake's source of truth here (no filesystem to cross-check). An
+    * empty index yields None: a table might be mid-registration, and a
+    * confidently-wrong 0 is worse than a scan. */
+  override protected def metadataEntries(db: String, table: String)
+      : Option[Seq[FileStat]] = {
+    val es = strings(command("HGETALL", statsKey(db, table))).grouped(2)
+      .collect { case Seq(path, v) => decode(json.readTree(v), path) }.toSeq
+    Some(es).filter(_.nonEmpty)
   }
 
   /** Remove specific file entries (compaction replaced them). */

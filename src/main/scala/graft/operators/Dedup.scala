@@ -195,25 +195,6 @@ object Dedup {
     }
   }
 
-  /**
-   * MinHash signature (length k) over a shingle-array column.
-   * One xxhash64 per shingle, then k multiply-add permutations —
-   * O(k·|shingles|) arithmetic on already-hashed values.
-   */
-  def minhashSignature(shingles: Column, k: Int): Column =
-    minhashSignatureFromHashes(
-      transform(shingles, s => xxhash64(s).bitwiseAND(0xFFFFFFFFL)), k)
-
-  /** MinHash signature from pre-hashed (32-bit-masked) shingle values. */
-  def minhashSignatureFromHashes(hashes: Column, k: Int): Column = {
-    val a = typedLit(mixConstants(k, 1, 30))
-    val b = typedLit(mixConstants(k, 2, 32))
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(hashes,
-        h => pmod(element_at(a, i + 1) * h + element_at(b, i + 1),
-          lit(MINHASH_P)))))
-  }
-
   /** Estimated Jaccard from two equal-length minhash signatures —
     * one codegen'd merge loop ([[graft.functions.SigAgreeCount]],
     * pinned in ShingleParitySpec ≡ `size(filter(zip_with(a, b,

@@ -790,15 +790,6 @@ object Similarity {
     Seq.fill(bits)(Seq.fill(dim)(rnd.nextGaussian()))
   }
 
-  /** Random-hyperplane LSH signature (int bucket of `bits` sign bits). */
-  def lshSignature(vecCol: Column, bits: Int, dim: Int, seed: Long = 42L): Column = {
-    val planes = hyperplanes(bits, dim, seed)
-    (0 until bits).foldLeft(lit(0)) { (acc, j) =>
-      acc.bitwiseOR(shiftleft(
-        when(dot(vecCol, typedLit(planes(j))) > 0, 1).otherwise(0), j))
-    }
-  }
-
   /**
    * Approximate kNN SELF-join: every vector's k nearest neighbours
    * across the corpus, without the O(n²) all-pairs plan. The corpus is

@@ -68,11 +68,6 @@ object TextAnalysis {
     stopwordHits(text) /
       greatest(tokenCount(text), lit(1)).cast("double")
 
-  /** Mean token length in characters. */
-  def avgTokenLen(text: Column): Column =
-    (length(regexp_replace(text, "\\s+", "")) /
-      greatest(tokenCount(text), lit(1)).cast("double"))
-
   /**
    * Heuristic quality score in [0,1]: combines length, stopword
    * presence and token-length sanity — the standard cheap pre-filter

@@ -203,6 +203,67 @@ class LakeWriterSpec extends AnyFunSuite {
     assert(meta.contains(""""row_count":2,"""))
   }
 
+  /** Rewrites the metadata.json in `dir` with `edit` (which must change
+    * it); returns the folder's one parquet file name. */
+  private def editMeta(dir: File)(edit: (String, String) => String): String = {
+    val name = dir.listFiles().map(_.getName).filter(_.endsWith(".parquet")).head
+    val meta = new File(dir, "metadata.json").toPath
+    val before = Files.readString(meta)
+    val after = edit(before, name)
+    assert(after != before, before)
+    Files.writeString(meta, after)
+    name
+  }
+
+  test("append keeps a prior entry's unknown row_count unknown") {
+    import spark.implicits._
+    import org.apache.spark.sql.SaveMode
+    val root = Files.createTempDirectory(
+      new File("target").toPath.toAbsolutePath, "wlake8").toString
+    val t0 = 1705276800000000000L
+    LakeWriter.write(root, "mydb", "m8",
+      Seq((t0, 1.0), (t0 + 1, 2.0), (t0 + 2, 3.0)).toDF("time", "v").coalesce(1))
+    editMeta(new File(s"$root/mydb/m8/date=2024-01-15"))((m, name) =>
+      m.replace(s""""path":"$name","row_count":3,""", s""""path":"$name","""))
+    LakeWriter.write(root, "mydb", "m8",
+      Seq((t0 + 3, 4.0)).toDF("time", "v").coalesce(1), mode = SaveMode.Append)
+    // an unknown row_count must not turn into a provable 0
+    assert(new Engine(spark, new Catalog(root))
+      .query("SELECT count(*) AS n FROM mydb.m8", "").collect().head.getLong(0) == 4L)
+    assert(new Catalog(root).metadataStats("mydb", "m8")._1.isEmpty)
+  }
+
+  test("append keeps zone maps of prior entries with relative or absolute paths") {
+    import spark.implicits._
+    import org.apache.spark.sql.SaveMode
+    val root = Files.createTempDirectory(
+      new File("target").toPath.toAbsolutePath, "wlake9").toString
+    val day = 86400L * 1000000000L
+    val t0 = 1705276800000000000L // 2024-01-15
+    LakeWriter.write(root, "mydb", "m9",
+      Seq((t0, 1.0), (t0 + day, 2.0)).toDF("time", "v").coalesce(1))
+    val d1 = new File(s"$root/mydb/m9/date=2024-01-15")
+    val d2 = new File(s"$root/mydb/m9/date=2024-01-16")
+    // reference-relative path in one folder, absolute path in the other
+    val old1 = editMeta(d1)((m, name) =>
+      m.replace(s""""path":"$name"""", s""""path":"date=2024-01-15/$name""""))
+    val old2 = editMeta(d2)((m, name) =>
+      m.replace(s""""path":"$name"""", s""""path":"${new File(d2, name).getAbsolutePath}""""))
+    LakeWriter.write(root, "mydb", "m9",
+      Seq((t0 + 1, 3.0), (t0 + day + 1, 4.0)).toDF("time", "v").coalesce(1),
+      mode = SaveMode.Append)
+    val c = new Catalog(root)
+    val files = c.files("mydb", "m9")
+    assert(files.size == 4, files)
+    assert(files.forall(f => f.minTime.isDefined && f.maxTime.isDefined), files)
+    val byPath = files.map(f => f.path -> f).toMap
+    val f1 = byPath(new File(d1, old1).getAbsolutePath)
+    val f2 = byPath(new File(d2, old2).getAbsolutePath)
+    assert(f1.minTime.contains(t0) && f1.maxTime.contains(t0))
+    assert(f2.minTime.contains(t0 + day) && f2.maxTime.contains(t0 + day))
+    assert(c.metadataStats("mydb", "m9") == ((Some(4L), Some((t0, t0 + day + 1)))))
+  }
+
   test("hour-level partitioning writes date=/hour= layout") {
     val root = Files.createTempDirectory(
       new File("target").toPath.toAbsolutePath, "wlake2").toString
